@@ -23,10 +23,10 @@ ROCKSDB_PROVIDER = (
     "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
 )
 
-# Defaults sized for the local[32] test harness; on a real cluster these are
-# overridden per-deployment. Shuffle partitions should be ~2-3× total cores.
+# Engine defaults for every session. ``spark.sql.shuffle.partitions`` is not
+# among them: build_session sets it to the session's own cores once the
+# context exists (see there).
 _LOCAL_DEFAULTS = {
-    "spark.sql.shuffle.partitions": "32",
     "spark.sql.adaptive.enabled": "true",
     "spark.sql.adaptive.coalescePartitions.enabled": "true",
     "spark.sql.adaptive.skewJoin.enabled": "true",
@@ -54,17 +54,28 @@ _SHM_SF_MULTIPLE = 4.0
 
 
 def _dir_size_bytes(path: str) -> int:
-    """Total size of the regular files directly under ``path`` (the flat
-    fixture layout); 0 when unreadable — callers treat 0 as "unknown"."""
-    try:
-        total = 0
-        for f in os.listdir(path):
-            fp = os.path.join(path, f)
-            if os.path.isfile(fp):
-                total += os.path.getsize(fp)
-        return total
-    except OSError:
-        return 0
+    """Total size of the regular files under ``path``, at any depth, so a
+    partitioned or nested table dir counts; 0 when unreadable — callers
+    treat 0 as "unknown"."""
+    total = 0
+    for root, _dirs, files in os.walk(path):
+        for f in files:
+            try:
+                total += os.path.getsize(os.path.join(root, f))
+            except OSError:
+                pass
+    return total
+
+
+def _local_cores() -> str:
+    """``SPARK_GRAFT_CPUS`` (default ``*``), the N of the ``local[N]``
+    master, validated before any JVM starts: a positive integer or ``*``."""
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
+    if cpus != "*" and not (cpus.isascii() and cpus.isdigit() and int(cpus) > 0):
+        raise ValueError(
+            f"SPARK_GRAFT_CPUS must be a positive integer or '*', got {cpus!r}"
+        )
+    return cpus
 
 
 def shm_scratch_root() -> str | None:
@@ -135,7 +146,7 @@ def build_session(
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     """Build the engine's SparkSession with scale-appropriate defaults."""
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
+    cpus = _local_cores()
     builder = SparkSession.builder.appName(app_name).master(master or f"local[{cpus}]")
     for k, v in _LOCAL_DEFAULTS.items():
         builder = builder.config(k, v)
@@ -172,5 +183,15 @@ def build_session(
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
+    # Shuffle partitions, and with them the state partitions of every
+    # stateful query started on this session, follow the session's cores.
+    # Each micro-batch opens and commits one state store, and runs one
+    # Python task, per partition; partitions past the core count buy no
+    # parallelism and still pay that fixed cost. A restarted query keeps
+    # the count recorded in its checkpoint's offset log.
+    if "spark.sql.shuffle.partitions" not in (extra_conf or {}):
+        spark.conf.set(
+            "spark.sql.shuffle.partitions", str(spark.sparkContext.defaultParallelism)
+        )
     spark.sparkContext.setLogLevel("WARN")
     return spark

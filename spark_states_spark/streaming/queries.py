@@ -1052,9 +1052,15 @@ def _fixture_state_parts(spark: SparkSession, tuned: int) -> int:
     resp. >=4-core session byte-identical. r15 matrix re-measurement
     (4/8/16 parts at 8 and 32 cores) is in OPTIMIZATION_r15.md.
     ``SPARK_GRAFT_FIXTURE_STATE_PARTS`` overrides for deployment tuning
-    and for the matrix measurements themselves."""
+    and for the matrix measurements themselves; it must be a positive
+    integer."""
     forced = os.environ.get("SPARK_GRAFT_FIXTURE_STATE_PARTS")
     if forced:
+        if not (forced.isascii() and forced.isdigit() and int(forced) > 0):
+            raise ValueError(
+                "SPARK_GRAFT_FIXTURE_STATE_PARTS must be a positive integer, "
+                f"got {forced!r}"
+            )
         return int(forced)
     return max(1, min(tuned, int(spark.sparkContext.defaultParallelism)))
 

@@ -139,19 +139,43 @@ def test_state_provider_unload_between_drains(spark, sf_dir_small, tmp_path):
 def test_kv_scale_knobs_thresholds(spark):
     """The TTL drains' deployment knobs switch together at _KV_SCALE_ROWS
     (r09, VERDICT r08 #3): fixture scale keeps the measured optimum
-    (16 parts, memory sink); past it, one state partition per core and the
-    distributed parquet sink."""
+    (16 parts, capped at the session's cores, memory sink); past it, one
+    state partition per core and the distributed parquet sink."""
     from spark_states_spark.streaming.queries import (
         _KV_SCALE_ROWS,
         _kv_sink,
         _kv_state_parts,
     )
 
-    assert _kv_state_parts(spark, 100_000) == 16
+    fixture_parts = min(16, spark.sparkContext.defaultParallelism)
+    assert _kv_state_parts(spark, 100_000) == fixture_parts
     assert _kv_sink(100_000) == "memory"
-    assert _kv_state_parts(spark, _KV_SCALE_ROWS) == 16
+    assert _kv_state_parts(spark, _KV_SCALE_ROWS) == fixture_parts
     assert _kv_sink(_KV_SCALE_ROWS) == "memory"
     big = _kv_state_parts(spark, _KV_SCALE_ROWS + 1)
     assert big >= 16
     assert big == max(16, spark.sparkContext.defaultParallelism)
     assert _kv_sink(_KV_SCALE_ROWS + 1) == "parquet"
+
+
+@pytest.mark.parametrize("bad", ["0", "-3", "2.5", "many"])
+def test_fixture_state_parts_env_rejects_non_positive_int(spark, monkeypatch, bad):
+    """SPARK_GRAFT_FIXTURE_STATE_PARTS pins spark.sql.shuffle.partitions:
+    anything but a positive integer fails at the read, naming the knob,
+    instead of failing mid-query (or not at all for 0 / negatives)."""
+    from spark_states_spark.streaming.queries import _fixture_state_parts
+
+    monkeypatch.setenv("SPARK_GRAFT_FIXTURE_STATE_PARTS", bad)
+    with pytest.raises(ValueError, match="SPARK_GRAFT_FIXTURE_STATE_PARTS"):
+        _fixture_state_parts(spark, 16)
+
+
+def test_fixture_state_parts_env_overrides_tuned(spark, monkeypatch):
+    from spark_states_spark.streaming.queries import _fixture_state_parts
+
+    monkeypatch.setenv("SPARK_GRAFT_FIXTURE_STATE_PARTS", "3")
+    assert _fixture_state_parts(spark, 16) == 3
+    monkeypatch.delenv("SPARK_GRAFT_FIXTURE_STATE_PARTS")
+    assert _fixture_state_parts(spark, 16) == min(
+        16, spark.sparkContext.defaultParallelism
+    )
