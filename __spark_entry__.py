@@ -19,6 +19,7 @@ from pyspark.sql import DataFrame, SparkSession
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from spark_states_spark.catalog import ORACLES, ordered_queries  # noqa: E402
+from spark_states_spark.session import STREAMING_CONF  # noqa: E402
 
 
 def _ensure_conf(spark: SparkSession) -> None:
@@ -26,16 +27,11 @@ def _ensure_conf(spark: SparkSession) -> None:
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     try:
-        spark.conf.set(
-            "spark.sql.streaming.stateStore.providerClass",
-            "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-        )
-        spark.conf.set(
-            "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled",
-            "true",
-        )
-        # Commit-speed default (r14, see session.py): row-count tracking
-        # costs an extra RocksDB point lookup per put/delete purely for the
+        for k, v in STREAMING_CONF.items():
+            spark.conf.set(k, v)
+        # Commit-speed default for the engine's own runs (session.py says
+        # why library sessions keep it on): row-count tracking costs an
+        # extra RocksDB point lookup per put/delete purely for the
         # numRowsTotal observability counter; results are unaffected.
         spark.conf.set(
             "spark.sql.streaming.stateStore.rocksdb.trackTotalNumberOfRows",

@@ -15,7 +15,9 @@ namespace.
 
 from __future__ import annotations
 
+import math
 import os
+import re
 
 from pyspark.sql import SparkSession
 
@@ -23,10 +25,37 @@ ROCKSDB_PROVIDER = (
     "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
 )
 
+# Every streaming checkpoint file (offset and commit logs, file-source and
+# file-sink metadata logs, RocksDB changelogs and snapshots) is written to a
+# temp file and renamed into place. Spark's default manager renames through
+# Hadoop's FileContext, whose rename checks the link status of source and
+# target; on a local path without Hadoop's native library each check forks
+# a `readlink` process. The FileSystem-based manager makes the same
+# exists-check plus POSIX rename without them, and writes the same bytes,
+# so checkpoints written by either manager restart under the other. A
+# checkpoint on a cluster file system or an object store picks its own
+# manager through build_session's ``extra_conf``.
+_CHECKPOINT_CONF = {
+    "spark.sql.streaming.checkpointFileManagerClass": (
+        "org.apache.spark.sql.execution.streaming.checkpointing."
+        "FileSystemBasedCheckpointFileManager"
+    ),
+}
+_ROCKSDB_STATE_CONF = {
+    "spark.sql.streaming.stateStore.providerClass": ROCKSDB_PROVIDER,
+    "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled": "true",
+}
+# The streaming confs every engine session carries, whoever built it:
+# build_session sets them on the builder (the state-store pair through
+# use_rocksdb_state_store), __spark_entry__._ensure_conf at runtime on a
+# session the engine did not build. All are read at query start.
+STREAMING_CONF = {**_CHECKPOINT_CONF, **_ROCKSDB_STATE_CONF}
+
 # Engine defaults for every session. ``spark.sql.shuffle.partitions`` is not
 # among them: build_session sets it to the session's own cores once the
 # context exists (see there).
 _LOCAL_DEFAULTS = {
+    **_CHECKPOINT_CONF,
     "spark.sql.adaptive.enabled": "true",
     "spark.sql.adaptive.coalescePartitions.enabled": "true",
     "spark.sql.adaptive.skewJoin.enabled": "true",
@@ -78,6 +107,37 @@ def _local_cores() -> str:
     return cpus
 
 
+def _driver_memory() -> str:
+    """``SPARK_GRAFT_DRIVER_MEM`` (default ``8g``), the driver JVM's heap,
+    validated before any JVM starts. spark-submit passes it to ``-Xmx``
+    as-is, so it must be a whole number with a k/m/g/t unit; anything else
+    would only surface as the gateway process exiting."""
+    mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g")
+    if not re.fullmatch(r"[1-9][0-9]*[kKmMgGtT]", mem):
+        raise ValueError(
+            f"SPARK_GRAFT_DRIVER_MEM must be a JVM size such as 8g or 512m, got {mem!r}"
+        )
+    return mem
+
+
+def _shm_min_free_gib() -> float:
+    """``SPARK_GRAFT_SHM_MIN_FREE_GIB`` (default _SHM_MIN_FREE_GIB): a
+    finite number >= 0. NaN would fail every comparison and so silently
+    disable /dev/shm; a negative floor would pass every gate."""
+    raw = os.environ.get("SPARK_GRAFT_SHM_MIN_FREE_GIB")
+    if raw is None:
+        return _SHM_MIN_FREE_GIB
+    try:
+        gib = float(raw)
+    except ValueError:
+        gib = math.nan
+    if not (math.isfinite(gib) and gib >= 0):
+        raise ValueError(
+            f"SPARK_GRAFT_SHM_MIN_FREE_GIB must be a finite number >= 0, got {raw!r}"
+        )
+    return gib
+
+
 def shm_scratch_root() -> str | None:
     """``/dev/shm`` when it is present, writable AND has the headroom for
     this workload's scratch; None otherwise (callers fall back to the
@@ -88,6 +148,7 @@ def shm_scratch_root() -> str | None:
     shuffle/spill scratch scales with input. A static build-time check is
     necessarily a heuristic — the override and the fallback keep it safe
     in both directions."""
+    min_free = _shm_min_free_gib() * (1 << 30)
     shm = "/dev/shm"
     if not (os.path.isdir(shm) and os.access(shm, os.W_OK)):
         return None
@@ -96,9 +157,6 @@ def shm_scratch_root() -> str | None:
         free = st.f_bavail * st.f_frsize
     except OSError:
         return None
-    min_free = float(
-        os.environ.get("SPARK_GRAFT_SHM_MIN_FREE_GIB", _SHM_MIN_FREE_GIB)
-    ) * (1 << 30)
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR")
     if sf_dir and os.path.isdir(sf_dir):
         min_free = max(min_free, _SHM_SF_MULTIPLE * _dir_size_bytes(sf_dir))
@@ -114,28 +172,22 @@ def use_rocksdb_state_store(builder: SparkSession.Builder) -> SparkSession.Build
     full-snapshot-per-commit durability (Provider.scala:448-462) — and write
     buffer tuning in the spirit of Provider.scala:101-107.
     """
+    for k, v in _ROCKSDB_STATE_CONF.items():
+        builder = builder.config(k, v)
     return (
-        builder.config("spark.sql.streaming.stateStore.providerClass", ROCKSDB_PROVIDER)
-        .config(
-            "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled",
-            "true",
-        )
         # 64 MB write buffers (reference used 200 MB ×3 for a heavy JNI store;
         # Spark's provider defaults are per-partition so keep them moderate).
-        .config("spark.sql.streaming.stateStore.rocksdb.writeBufferSizeMB", "64")
+        builder.config("spark.sql.streaming.stateStore.rocksdb.writeBufferSizeMB", "64")
         .config("spark.sql.streaming.stateStore.rocksdb.maxWriteBufferNumber", "3")
         .config("spark.sql.streaming.stateStore.rocksdb.compression", "lz4")
-        # NOTE (r15, ADVICE r14): rocksdb.trackTotalNumberOfRows is NO
-        # LONGER flipped here. The r14 throughput default (tracking off —
-        # every put/delete otherwise pays an extra RocksDB point lookup
-        # solely for the numRowsTotal/numRowsRemoved counters) made every
-        # library user of build_session see -1 on the lastProgress metrics
-        # surface that streaming/metrics.py documents as the parity answer
-        # to the reference's StateStore.metrics. The throughput default now
-        # lives only in the ENGINE's own entry paths (__spark_entry__
-        # _ensure_conf, bench.py, scalecheck.py, scaleprobe.py — the conf
-        # is runtime-settable and read at query start), so library
-        # sessions keep Spark's documented metric semantics.
+        # rocksdb.trackTotalNumberOfRows keeps Spark's default (on) here.
+        # Turning it off saves a RocksDB point lookup per put/delete, but the
+        # numRowsTotal/numRowsRemoved progress metrics then read -1, and
+        # streaming/metrics.py documents those metrics as the answer to the
+        # reference's StateStore.metrics. So only the engine's own entry
+        # paths turn it off (__spark_entry__._ensure_conf, bench.py,
+        # scalecheck.py, scaleprobe.py; the conf is runtime-settable and read
+        # at query start), and library sessions keep Spark's metrics.
     )
 
 
@@ -146,7 +198,11 @@ def build_session(
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     """Build the engine's SparkSession with scale-appropriate defaults."""
+    # The value knobs (cores, heap, /dev/shm floor) are checked before the
+    # builder is touched, so a bad value never reaches the JVM launch.
     cpus = _local_cores()
+    driver_mem = _driver_memory()
+    _shm_min_free_gib()
     builder = SparkSession.builder.appName(app_name).master(master or f"local[{cpus}]")
     for k, v in _LOCAL_DEFAULTS.items():
         builder = builder.config(k, v)
@@ -159,9 +215,7 @@ def build_session(
     # SPARK_GRAFT_DRIVER_MEM in main() after importing this module must
     # still get its heap (ADVICE r08: the import-time read silently ran
     # the 24g probe on 8g).
-    builder = builder.config(
-        "spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g")
-    )
+    builder = builder.config("spark.driver.memory", driver_mem)
     # Scratch space (shuffle files, RocksDB working dirs) on the fastest
     # local storage available (optimization r14, guide §2.1: local disk
     # bandwidth can be the shuffle's tighter limit). On this harness /tmp

@@ -1113,11 +1113,16 @@ def _kv_sink(n_rows: int) -> str:
     ``SPARK_GRAFT_KV_SINK`` overrides the size gate (VERDICT r09 #3: every
     sf0.01/sf0.1 gate run sits below the threshold, so the production
     parquet path was continuously UNverified at the scales the driver
-    grades — scalecheck now forces one TTL oracle through it per round)."""
+    grades — scalecheck now forces one TTL oracle through it per round).
+    Any other set value raises rather than falling back to the gate."""
     forced = os.environ.get("SPARK_GRAFT_KV_SINK")
-    if forced in ("memory", "parquet"):
-        return forced
-    return "memory" if n_rows <= _KV_SCALE_ROWS else "parquet"
+    if forced is None:
+        return "memory" if n_rows <= _KV_SCALE_ROWS else "parquet"
+    if forced not in ("memory", "parquet"):
+        raise ValueError(
+            f"SPARK_GRAFT_KV_SINK must be 'memory' or 'parquet', got {forced!r}"
+        )
+    return forced
 
 
 # Shared CTE prefix: both outer/semi oracles reason about the final global

@@ -90,6 +90,47 @@ def test_corrupted_state_files_fail_restart_not_degrade(spark, tmp_path):
         _run_counts(spark, src, ckpt)
 
 
+def test_checkpoint_restarts_across_checkpoint_managers(spark, tmp_path):
+    """A checkpoint written through Spark's default FileContext-based
+    manager restarts under the engine's FileSystem-based one: both write
+    the same files, so the restarted aggregation's output equals an
+    uninterrupted run's, and a clean stop leaves no temp file behind."""
+    conf = "spark.sql.streaming.checkpointFileManagerClass"
+    file_context = (
+        "org.apache.spark.sql.execution.streaming.checkpointing."
+        "FileContextBasedCheckpointFileManager"
+    )
+    batches = [
+        [("a", "put", 1, 0), ("b", "put", 2, 0)],
+        [("a", "get", None, 1), ("c", "put", 3, 1)],
+        [("b", "remove", None, 2), ("a", "put", 4, 2)],
+        [("c", "get", None, 3), ("d", "put", 5, 3)],
+    ]
+    base = time.time() - 100
+    full, src = str(tmp_path / "full"), str(tmp_path / "src")
+    ckpt = str(tmp_path / "ckpt")
+    for i, rows in enumerate(batches):
+        _write_batch(full, rows, base + i)
+    expected = sorted(map(tuple, _run_counts(spark, full, str(tmp_path / "c_full")).collect()))
+
+    for i, rows in enumerate(batches[:2]):
+        _write_batch(src, rows, base + i)
+    engine_default = spark.conf.get(conf)
+    spark.conf.set(conf, file_context)
+    try:
+        first = sorted(map(tuple, _run_counts(spark, src, ckpt).collect()))
+    finally:
+        spark.conf.set(conf, engine_default)
+    assert first == [("a", 2), ("b", 1), ("c", 1)]
+
+    for i, rows in enumerate(batches[2:], start=2):
+        _write_batch(src, rows, base + i)
+    got = sorted(map(tuple, _run_counts(spark, src, ckpt).collect()))
+    assert got == expected == [("a", 3), ("b", 2), ("c", 2), ("d", 1)]
+    # Temp files are hidden (".<name>.<uuid>.tmp"), which glob would skip.
+    assert not [f for _r, _d, fs in os.walk(ckpt) for f in fs if f.endswith(".tmp")]
+
+
 def test_failed_batch_not_committed_restart_recomputes(spark, tmp_path):
     """Abort semantics at query granularity (PARITY row 6, StateStore.abort
     Provider.scala:222-238): a batch that fails AFTER its stateful tasks ran
@@ -216,8 +257,7 @@ def test_old_state_versions_cleaned_up(spark, tmp_path):
     ckpt = str(tmp_path / "ckpt")
     base = time.time() - 100
     n_batches = 6
-    for i in range(n_batches):
-        _write_batch(src, [("a", "put", i, i)], base + i)
+    _write_batch(src, [("a", "put", 0, 0)], base)
 
     confs = {
         "spark.sql.streaming.minBatchesToRetain": "2",
@@ -262,6 +302,24 @@ def test_old_state_versions_cleaned_up(spark, tmp_path):
                             out.add(int(stem))
                 return out
 
+            def uploaded(version):
+                # Version 1's snapshot is uploaded only after version 2
+                # commits, so for it the committed changelog is the signal.
+                name = f"{version}.zip" if version > 1 else "1.changelog"
+                parts = _glob.glob(os.path.join(ckpt, "state", "0", "[0-9]*"))
+                return parts and all(
+                    os.path.exists(os.path.join(p, name)) for p in parts
+                )
+
+            # One batch at a time, each fed only after the previous version
+            # is uploaded in every partition. Maintenance uploads only the
+            # newest pending snapshot, and retention counts snapshots, so
+            # batches that commit faster than maintenance runs would leave
+            # sparse snapshots and an older retained version.
+            for i in range(1, n_batches):
+                while time.time() < deadline and not uploaded(i):
+                    time.sleep(0.1)
+                _write_batch(src, [("a", "put", i, i)], base + i)
             # all batches processed → newest version present
             while time.time() < deadline and (
                 not version_files() or max(version_files(), default=0) < n_batches

@@ -1,6 +1,7 @@
 """build_session defaults: shuffle (and state) partitions follow the
-session's cores, the env knobs that pick the core count fail fast, and the
-/dev/shm gate sizes nested input dirs.
+session's cores, streaming checkpoints go through the FileSystem-based
+checkpoint manager, every SPARK_GRAFT_* knob the session reads fails fast,
+and the /dev/shm gate sizes nested input dirs.
 
 Tests that re-run ``build_session`` on the shared test session restore
 every session conf they change (the ``restore_conf`` fixture)."""
@@ -21,9 +22,14 @@ from spark_states_spark.session import build_session
 from spark_states_spark.streaming.state_reader import state_metadata
 from spark_states_spark.streaming.ttl import OPS_SCHEMA, ttl_kv_ops
 from spark_states_spark.streaming.writer import state_timeout
+from tests.test_driver_contract import _load_entry
 from tests.test_ttl import _write_batches
 
 SHUFFLE_PARTS = "spark.sql.shuffle.partitions"
+CHECKPOINT_MANAGER = "spark.sql.streaming.checkpointFileManagerClass"
+_CHECKPOINTING = "org.apache.spark.sql.execution.streaming.checkpointing"
+FILE_SYSTEM_MANAGER = f"{_CHECKPOINTING}.FileSystemBasedCheckpointFileManager"
+FILE_CONTEXT_MANAGER = f"{_CHECKPOINTING}.FileContextBasedCheckpointFileManager"
 
 
 @pytest.fixture()
@@ -52,6 +58,45 @@ def test_build_session_extra_conf_shuffle_partitions_wins(spark, restore_conf):
         extra_conf={SHUFFLE_PARTS: "7"},
     )
     assert s.conf.get(SHUFFLE_PARTS) == "7"
+
+
+def _checkpoint_manager(spark, path: str) -> str:
+    """Class name of the manager Spark creates for a checkpoint at ``path``,
+    through the same call its offset log and state store make."""
+    jvm = spark._jvm
+    manager = getattr(jvm, _CHECKPOINTING).CheckpointFileManager.create(
+        jvm.org.apache.hadoop.fs.Path(path),
+        spark._jsparkSession.sessionState().newHadoopConf(),
+    )
+    return manager.getClass().getName()
+
+
+def test_build_session_uses_filesystem_checkpoint_manager(
+    spark, tmp_path, restore_conf
+):
+    spark.conf.set(CHECKPOINT_MANAGER, FILE_CONTEXT_MANAGER)
+    build_session(app_name="spark_states_spark_tests")
+    assert _checkpoint_manager(spark, str(tmp_path)) == FILE_SYSTEM_MANAGER
+
+
+def test_build_session_extra_conf_checkpoint_manager_wins(
+    spark, tmp_path, restore_conf
+):
+    build_session(
+        app_name="spark_states_spark_tests",
+        extra_conf={CHECKPOINT_MANAGER: FILE_CONTEXT_MANAGER},
+    )
+    assert _checkpoint_manager(spark, str(tmp_path)) == FILE_CONTEXT_MANAGER
+
+
+def test_entry_conf_applies_streaming_conf(spark, tmp_path, restore_conf):
+    """On a session the engine did not build, the entry path sets the same
+    streaming confs at runtime, and the manager conf takes effect there."""
+    for k in sess.STREAMING_CONF:
+        spark.conf.unset(k)
+    _load_entry()._ensure_conf(spark)
+    assert {k: spark.conf.get(k) for k in sess.STREAMING_CONF} == sess.STREAMING_CONF
+    assert _checkpoint_manager(spark, str(tmp_path)) == FILE_SYSTEM_MANAGER
 
 
 def _drain_ttl(spark, src: str, ckpt_root: str, name: str) -> tuple[str, Counter]:
@@ -127,6 +172,61 @@ def test_spark_graft_cpus_rejected_before_jvm(monkeypatch, bad):
     monkeypatch.setattr(sess, "SparkSession", None)
     with pytest.raises(ValueError, match="SPARK_GRAFT_CPUS"):
         build_session()
+
+
+@pytest.mark.parametrize(
+    "var, bad",
+    [
+        ("SPARK_GRAFT_DRIVER_MEM", "8"),
+        ("SPARK_GRAFT_DRIVER_MEM", "8gb"),
+        ("SPARK_GRAFT_DRIVER_MEM", "0g"),
+        ("SPARK_GRAFT_DRIVER_MEM", "1.5g"),
+        ("SPARK_GRAFT_DRIVER_MEM", "eight"),
+        ("SPARK_GRAFT_DRIVER_MEM", ""),
+        ("SPARK_GRAFT_SHM_MIN_FREE_GIB", "abc"),
+        ("SPARK_GRAFT_SHM_MIN_FREE_GIB", "nan"),
+        ("SPARK_GRAFT_SHM_MIN_FREE_GIB", "inf"),
+        ("SPARK_GRAFT_SHM_MIN_FREE_GIB", "-1"),
+        ("SPARK_GRAFT_SHM_MIN_FREE_GIB", ""),
+    ],
+)
+def test_session_knobs_rejected_before_jvm(monkeypatch, var, bad):
+    # SPARK_GRAFT_LOCAL_DIR skips the /dev/shm gate; the floor is still checked.
+    monkeypatch.setenv("SPARK_GRAFT_LOCAL_DIR", "/nonexistent")
+    monkeypatch.setenv(var, bad)
+    monkeypatch.setattr(sess, "SparkSession", None)
+    with pytest.raises(ValueError, match=var):
+        build_session()
+
+
+def test_shm_gate_rejects_bad_floor(monkeypatch):
+    """The gate is also reached outside build_session (the runner's
+    ephemeral checkpoint root); it checks the floor the same way."""
+    monkeypatch.setenv("SPARK_GRAFT_SHM_MIN_FREE_GIB", "nan")
+    with pytest.raises(ValueError, match="SPARK_GRAFT_SHM_MIN_FREE_GIB"):
+        sess.shm_scratch_root()
+
+
+@pytest.mark.parametrize(
+    "good, mem", [("8g", "8g"), ("512m", "512m"), ("24G", "24G"), (None, "8g")]
+)
+def test_driver_memory_accepted(monkeypatch, good, mem):
+    if good is None:
+        monkeypatch.delenv("SPARK_GRAFT_DRIVER_MEM", raising=False)
+    else:
+        monkeypatch.setenv("SPARK_GRAFT_DRIVER_MEM", good)
+    assert sess._driver_memory() == mem
+
+
+@pytest.mark.parametrize(
+    "good, gib", [("0", 0.0), ("2.5", 2.5), (None, sess._SHM_MIN_FREE_GIB)]
+)
+def test_shm_min_free_gib_accepted(monkeypatch, good, gib):
+    if good is None:
+        monkeypatch.delenv("SPARK_GRAFT_SHM_MIN_FREE_GIB", raising=False)
+    else:
+        monkeypatch.setenv("SPARK_GRAFT_SHM_MIN_FREE_GIB", good)
+    assert sess._shm_min_free_gib() == gib
 
 
 @pytest.mark.parametrize("good", ["*", "1", "32"])
